@@ -99,6 +99,7 @@ def oracle_from_index(
     )
     from docinsight_spark.operators.postings import CorpusStats
     from docinsight_spark.operators.query import search
+    from docinsight_spark.session import local_frame
 
     meta = fsio.read_json(f"{index_dir}/_meta.json")
     postings = load_merged_postings(spark, index_dir, meta)
@@ -115,7 +116,8 @@ def oracle_from_index(
     qterms = None
     qmap = _query_term_map(queries, code_aware, DRIVER_TOKENIZE_MAX, qlang)
     if qmap is not None:
-        qterms = spark.createDataFrame(
+        qterms = local_frame(
+            spark,
             [(qid, t) for qid, ts in qmap.items() for t in ts],
             "query_id long, term string",
         )
@@ -125,8 +127,6 @@ def oracle_from_index(
         # so parquet row-group min/max stats skip non-matching groups).
         # The join alone cannot do this: its build side is unknown to
         # the scan.  Guard the literal list like the phrase path does.
-        from pyspark.sql import functions as F
-
         # (neg_terms excludes docs via their OWN postings rows — the
         # filter would drop them, so only the pure-positive shapes
         # take it; require_all intersects the same positive terms.)

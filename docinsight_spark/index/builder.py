@@ -74,6 +74,7 @@ from docinsight_spark.operators.postings import (
     term_stats,
     with_doc_id,
 )
+from docinsight_spark.session import local_frame
 
 SEGMENT_SCHEMA = (
     "doc_bucket int, doc_sub int, term string, n long, "
@@ -158,8 +159,11 @@ def read_manifests(index_dir: str) -> list[dict]:
             continue
         try:
             m = fsio.read_json(f"{index_dir}/manifests/{fn}")
-        except (FileNotFoundError, OSError):
-            raced = True  # folded away mid-read; its ledger copy exists
+        except FileNotFoundError:
+            # folded away mid-read; its ledger copy exists.  Any other
+            # IO error (permissions, a failing disk) propagates: served
+            # as a "raced" fold it would hide units from the lineage
+            raced = True
             continue
         loose[m.get("unit", fn[: -len(".json")])] = m
     if raced:
@@ -1536,7 +1540,8 @@ class IndexBuilder:
         ])
         dead_ids = dead.distinct()
         clean = flat.join(F.broadcast(dead_ids), "docID", "left_anti")
-        seq_df = self.spark.createDataFrame(
+        seq_df = local_frame(
+            self.spark,
             [
                 (m["run_id"], i)
                 for i, m in enumerate(
@@ -1694,7 +1699,7 @@ class IndexBuilder:
                     # a run key with no rows (tiny corpora): materialise
                     # an empty-but-readable dataset so merge/gate scans
                     # never trip on a missing path
-                    self.spark.createDataFrame([], schema).repartition(
+                    local_frame(self.spark, [], schema).repartition(
                         1
                     ).write.mode("overwrite").parquet(f"{base}/{sub}")
             n_postings, _ = _footer_rows(f"{base}/postings", spark=self.spark)

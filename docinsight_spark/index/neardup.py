@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from docinsight_spark.index import fsio
 from docinsight_spark.operators.dedup import minhash_signatures, shingles
+from docinsight_spark.session import local_frame
 
 
 def _band_rows(
@@ -381,8 +382,8 @@ class NearDupStore:
         fraction from the stored signatures' band keys is unavailable —
         estimate mode verifies on band agreement count / bands, coarser
         but needs no shingle store."""
-        empty = self.spark.createDataFrame(
-            [], "new_id long, base_id long, jaccard double"
+        empty = local_frame(
+            self.spark, [], "new_id long, base_id long, jaccard double"
         )
         base_bands = self._read("bands")
         if base_bands is None:

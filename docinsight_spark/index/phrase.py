@@ -70,6 +70,7 @@ from docinsight_spark.index.builder import (
     read_manifests,
     _union_frames,
 )
+from docinsight_spark.session import local_frame
 
 # Java-regex \s parity with the build/WAND driver paths (wand.py:_query_term_map)
 _JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
@@ -112,9 +113,7 @@ def phrase_single_pass_max_rows() -> int:
 def _restrict_terms(df: DataFrame, terms: list[str]) -> DataFrame:
     if len(terms) <= TERM_INLIST_MAX:
         return df.filter(F.col("term").isin(terms))
-    tdf = df.sparkSession.createDataFrame(
-        [(t,) for t in terms], "term string"
-    )
+    tdf = local_frame(df.sparkSession, [(t,) for t in terms], "term string")
     return df.join(F.broadcast(tdf), "term", "left_semi")
 
 
@@ -272,14 +271,15 @@ def _positional_search(
     else:
         rows = [(int(q), t) for q, t in queries]
     offsets = _phrase_offsets(rows, code_aware, qlang)
-    empty = spark.createDataFrame(
-        [], "query_id long, rank int, docID long, score double"
+    empty = local_frame(
+        spark, [], "query_id long, rank int, docID long, score double"
     )
     if not offsets:
         return empty
     all_terms = sorted({t for _, _, t in offsets})
-    offs = spark.createDataFrame(offsets, "query_id long, off int, term string")
-    noff = spark.createDataFrame(
+    offs = local_frame(spark, offsets, "query_id long, off int, term string")
+    noff = local_frame(
+        spark,
         [
             (qid, sum(1 for q, _, _ in offsets if q == qid))
             for qid in sorted({q for q, _, _ in offsets})
@@ -361,7 +361,8 @@ def _positional_search(
     if len(cand_rows) <= CAND_COLLECT_MAX:
         if not cand_rows:
             return empty
-        cand = spark.createDataFrame(
+        cand = local_frame(
+            spark,
             [(int(r["query_id"]), int(r["docID"])) for r in cand_rows],
             "query_id long, docID long",
         )
@@ -697,10 +698,9 @@ def snippet_windows(
             "(the term restriction is driver-resident)"
         )
     terms = [r["term"] for r in thead]
+    out_schema = "query_id long, docID long, snippet_start int, n_matches long"
     if not terms:
-        return spark.createDataFrame(
-            [], "query_id long, docID long, snippet_start int, n_matches long"
-        )
+        return local_frame(spark, [], out_schema)
     roots = merged_roots(index_dir, meta)
     cand = candidates.select("query_id", "docID").distinct()
     # same bounded-collect + bucket pruning as phrase_search: snippet
@@ -711,10 +711,9 @@ def snippet_windows(
     cand_rows = cand.limit(CAND_COLLECT_MAX + 1).collect()
     if len(cand_rows) <= CAND_COLLECT_MAX:
         if not cand_rows:
-            return spark.createDataFrame(
-                [], "query_id long, docID long, snippet_start int, n_matches long"
-            )
-        cand = spark.createDataFrame(
+            return local_frame(spark, [], out_schema)
+        cand = local_frame(
+            spark,
             [(int(r["query_id"]), int(r["docID"])) for r in cand_rows],
             "query_id long, docID long",
         )

@@ -8,10 +8,10 @@ shard-per-bucket design):
    partition dirs narrow the file listing, and the ``term IN (…)``
    predicate prunes parquet row groups because segments are written
    sorted by ``term`` (min/max stats per row group).
-2. One task per shard ``(doc_bucket, doc_sub)`` via
-   ``repartitionByRange`` of the *matched rows only* — equal keys stay
-   whole, task sizes balance, and every shard holds the complete
-   postings of its documents, so scoring is shard-local.
+2. The *matched rows only* hash-co-locate by shard ``(doc_bucket,
+   doc_sub)`` in one AQE-sized stage (a task holds whole shards, and
+   every shard holds the complete postings of its documents), so
+   scoring is shard-local.
 3. Inside the task, a vectorized MaxScore/block-max kernel scores each
    query against the shard's matched posting lists:
 
@@ -77,6 +77,7 @@ from docinsight_spark.index.builder import (
     tombstone_root_dirs,
 )
 from docinsight_spark.index.codec import BlockMeta, decode_block
+from docinsight_spark.session import local_frame
 
 
 def _load_meta(index_dir: str) -> dict:
@@ -688,8 +689,8 @@ def wand_search(
     # `#` comments at build time — queries must mask them the same way
     # (recorded by finalize/refresh from the runs' lang mix)
     qlang = str(meta.get("query_lang", "java"))
-    empty = spark.createDataFrame(
-        [], "query_id long, rank int, docID long, score double"
+    empty = local_frame(
+        spark, [], "query_id long, rank int, docID long, score double"
     )
     qmap = (
         # same invariant as _query_term_map: no empty term lists (a
@@ -721,7 +722,6 @@ def wand_search(
             )
     n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
     k1, b = float(meta["k1"]), float(meta["b"])
-    n_shards = int(meta["n_buckets"]) * int(meta.get("n_subs", 1))
 
     base = _segments if _segments is not None else load_segments(
         spark, index_dir, meta
@@ -759,7 +759,7 @@ def wand_search(
         for wi, wave in enumerate(waves):
             part = _wave_local_topk(
                 spark, base, tstats, wave, dl_roots,
-                n_docs, avgdl, k1, b, k, n_shards, tomb_dirs,
+                n_docs, avgdl, k1, b, k, tomb_dirs,
                 require_all=require_all, neg_qmap=neg_qmap,
             )
             local = part if local is None else local.unionByName(part)
@@ -788,7 +788,6 @@ def _wave_local_topk(
     k1: float,
     b: float,
     k: int,
-    n_shards: int,
     tomb_dirs: dict[str, list[str]] | None = None,
     require_all: bool = False,
     neg_qmap: dict[int, list[str]] | None = None,
@@ -814,7 +813,7 @@ def _wave_local_topk(
         | ({t for ts in neg_qmap.values() for t in ts} if neg_qmap else set())
     )
     if not all_terms:
-        return spark.createDataFrame([], "query_id long, docID long, score double")
+        return local_frame(spark, [], "query_id long, docID long, score double")
     if len(all_terms) <= 1024:
         # IN-list pushes to parquet row-group stats (segments are
         # term-sorted within each shard file)
@@ -822,7 +821,7 @@ def _wave_local_topk(
         tfil = tstats.filter(F.col("term").isin(all_terms))
     else:
         # huge term sets would bloat the plan; broadcast semi-join instead
-        terms_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
+        terms_df = local_frame(spark, [(t,) for t in all_terms], "term string")
         seg = base.join(F.broadcast(terms_df), "term", "left_semi")
         tfil = tstats.join(F.broadcast(terms_df), "term", "left_semi")
     # Segments store idf-independent block maxima; df (→ idf) joins back
@@ -939,10 +938,10 @@ def _wave_local_topk(
             {"query_id": "int64", "docID": "int64", "score": "float64"}
         )
 
-    # Hash repartition (not range): the kernel groups rows by shard key
-    # itself, so co-location is all that matters — and range partitioning
-    # would add a sampling job per search call (query fixed cost).
-    return seg.repartition(n_shards, "doc_bucket", "doc_sub").mapInPandas(
+    # Column-only hash repartition: the kernel groups rows by shard itself,
+    # so only co-location matters and AQE sizes the stage by input bytes (a
+    # Python task costs ~0.3 s); range would add a sampling job per call.
+    return seg.repartition("doc_bucket", "doc_sub").mapInPandas(
         run, schema="query_id long, docID long, score double"
     )
 
@@ -1007,7 +1006,7 @@ def expand_dictionary(
     ]
     pats = [(q, p) for q, p in pats if p]
     if not pats:
-        return spark.createDataFrame([], "query_id long, term string, df long")
+        return local_frame(spark, [], "query_id long, term string, df long")
     ts = _tstats if _tstats is not None else load_term_stats(
         spark, index_dir, meta
     )
@@ -1015,7 +1014,7 @@ def expand_dictionary(
     for p in sorted({p for _, p in pats}):
         c = _dict_predicate(mode, F.col("term"), p)
         cond = c if cond is None else (cond | c)
-    pdf = spark.createDataFrame(pats, "query_id long, pattern string")
+    pdf = local_frame(spark, pats, "query_id long, pattern string")
     w = Window.partitionBy("query_id").orderBy(
         F.col("df").desc(), F.col("term")
     )

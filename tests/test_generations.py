@@ -332,6 +332,40 @@ def test_read_manifests_survives_concurrent_fold(spark, tmp_path, monkeypatch):
     assert "run-base" in got
 
 
+def test_read_manifests_propagates_real_io_errors(spark, tmp_path, monkeypatch):
+    """Only a VANISHED loose file counts as a raced fold: any other IO
+    error reading it (permissions, a failing disk) must propagate, not
+    silently drop the unit from the lineage ``merged_roots`` reads on
+    every phrase call.  The vanished case still falls back to the
+    ledger."""
+    from docinsight_spark.index import builder as B
+
+    d = str(tmp_path / "ioerr")
+    b = IndexBuilder(spark, d, n_buckets=2)
+    b._commit("run-base", run_id="base", postings=1, docs=1, langs={},
+              settings=b._settings())
+    b.fold_ledger()
+    loose = f"{d}/manifests/extra-unit.json"
+    B._atomic_write_json(loose, {"unit": "extra-unit", "x": 1})
+    real_read = B.fsio.read_json
+
+    def failing(exc):
+        def read(path):
+            if path == loose:
+                raise exc(path)
+            return real_read(path)
+        return read
+
+    monkeypatch.setattr(B.fsio, "read_json", failing(PermissionError))
+    with pytest.raises(PermissionError):
+        B.read_manifests(d)
+    # vanished mid-read: the ledger is re-read (here it lacks the unit,
+    # so the reader serves exactly the ledger's units — no crash)
+    monkeypatch.setattr(B.fsio, "read_json", failing(FileNotFoundError))
+    got = {m["unit"] for m in B.read_manifests(d)}
+    assert got == {"run-base"}
+
+
 def test_ledger_survives_build_refresh_cycle(spark, tmp_path):
     """End-to-end: build → ingest → refresh with ledger folds at every
     finalize/refresh; coverage, resume short-circuits and queries keep

@@ -295,3 +295,59 @@ def test_prefix_expansion_pushdown(spark, small_index):
     exp = expand_prefix(spark, small_index, [(0, "re")], max_expansions=4)
     p = assert_pushed_filter(exp, "StringStartsWith(term")
     assert "PushedFilters" in p
+
+
+# ---------------------------------------------------------------------------
+# Python-boundary pins: one AQE-sized kernel stage, no Python-RDD frames
+# ---------------------------------------------------------------------------
+
+
+def test_wand_kernel_exchange_is_aqe_sized(spark, small_index):
+    """The WAND kernel's exchange co-locates shards by a column-only hash
+    repartition (REPARTITION_BY_COL, which AQE may coalesce — one task at
+    small scale), never a fixed one-task-per-shard count
+    (REPARTITION_BY_NUM: every extra Python-worker task is ~0.3 s)."""
+    from docinsight_spark.index.wand import wand_search
+
+    q = make_queries(spark, corpus_n=200, n_queries=5)
+    p = plan_text(wand_search(spark, small_index, q, k=5))
+    kernel = [
+        l for l in p.splitlines()
+        if l.startswith("Arguments: hashpartitioning(doc_bucket")
+    ]
+    assert len(kernel) == 1 and "REPARTITION_BY_COL" in kernel[0], p
+    assert "REPARTITION_BY_NUM" not in p, p
+
+
+def _assert_no_python_rdd(df, local_scan: bool = True) -> None:
+    p = plan_text(df)
+    assert "ExistingRDD" not in p, p
+    if local_scan:
+        assert "LocalTableScan" in p, p
+
+
+def test_serving_plans_have_no_python_rdd(
+    spark, small_index, pos_index, real_bigram, monkeypatch
+):
+    """Driver-built frames in the serving plans (phrase offsets, query
+    terms, collected candidates) are Arrow LocalRelations
+    (``LocalTableScan``), never a Python RDD (``Scan ExistingRDD``,
+    which starts Python-worker tasks in every job touching it)."""
+    from docinsight_spark.evaluation import oracle_from_index
+    from docinsight_spark.index.phrase import phrase_search, proximity_search
+    from docinsight_spark.index.wand import wand_search
+
+    q = make_queries(spark, corpus_n=200, n_queries=5)
+    # the WAND query map rides a broadcast variable: no frame at all
+    _assert_no_python_rdd(wand_search(spark, small_index, q, k=5), False)
+    _assert_no_python_rdd(
+        wand_search(spark, small_index, q, k=5, require_all=True), False
+    )
+    _assert_no_python_rdd(oracle_from_index(spark, small_index, q, k=5))
+    _assert_no_python_rdd(phrase_search(spark, pos_index, [(0, real_bigram)]))
+    _assert_no_python_rdd(
+        proximity_search(spark, pos_index, [(0, real_bigram)], window=4)
+    )
+    # collected-candidates plan (hot-term regime)
+    monkeypatch.setenv("DOCINSIGHT_PHRASE_SINGLE_PASS_MAX", "-1")
+    _assert_no_python_rdd(phrase_search(spark, pos_index, [(0, real_bigram)]))
